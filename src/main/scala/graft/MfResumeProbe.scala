@@ -8,9 +8,9 @@ import org.apache.spark.sql.SparkSession
   * Three modes over the SAME instance (ScaleProbe's small-world generator
   * and terminal pick, so every mode solves an identical graph):
   *
-  *  - `full <n>`             — uninterrupted schimmy run; prints the flow
+  *  - `full <n>`             — uninterrupted run; prints the flow
   *                             (the oracle for the other two modes).
-  *  - `run <n> <stateDir>`   — schimmy run with round-tagged checkpoints
+  *  - `run <n> <stateDir>`   — run with round-tagged checkpoints
   *                             every 3 rounds; the HARNESS kill -9s this
   *                             JVM mid-flight.
   *  - `resume <stateDir> <wantTotal>` — audits the newest complete
@@ -53,7 +53,7 @@ object MfResumeProbe {
         val spark = session()
         val (sources, sinks) = ScaleProbe.terminals(n)
         val t0 = System.nanoTime()
-        val r = graft.graph.MaxFlowSchimmy.run(spark, buildGraph(spark, n), sources, sinks)
+        val r = graft.graph.MaxFlow.run(spark, buildGraph(spark, n), sources, sinks)
         require(StateIO.conservationHolds(r.assignment, r.flow),
           "full-run conservation violated")
         println(f"RESUMEPROBE full flow=${r.flow} rounds=${r.rounds} " +
@@ -69,7 +69,7 @@ object MfResumeProbe {
         java.nio.file.Files.write(java.nio.file.Paths.get("/tmp/mfresume.pid"),
           ProcessHandle.current().pid().toString.getBytes("UTF-8"))
         println(s"RESUMEPROBE run started n=$n stateDir=$dir (kill me mid-flight)")
-        val r = graft.graph.MaxFlowSchimmy.run(spark, buildGraph(spark, n),
+        val r = graft.graph.MaxFlow.run(spark, buildGraph(spark, n),
           sources, sinks,
           graft.graph.MaxFlow.Config(stateDir = Some(dir), checkpointEvery = 3))
         // only reached if the harness failed to kill in time
@@ -86,7 +86,7 @@ object MfResumeProbe {
           .filter(_.id == graft.graph.GraphModel.SuperSource)
           .head().adj.map(_.flow).sum
         val t0 = System.nanoTime()
-        val r = graft.graph.MaxFlowSchimmy.resume(spark, dir)
+        val r = graft.graph.MaxFlow.resume(spark, dir)
         val dt = (System.nanoTime() - t0) / 1e9
         val conserved = StateIO.conservationHolds(r.assignment, r.flow)
         val firstRound = r.rounds_report.headOption.map(_.round).getOrElse(-1)

@@ -13,6 +13,20 @@ class MaxFlowSpec extends AnyFunSuite {
 
   private def toDf(edges: Seq[(Long, Long, Long)]) = edges.toDF("src", "dst", "cap")
 
+  /** Spark jobs started while `body` runs. */
+  private def jobsDuring[A](body: => A): (A, Int) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val n = new java.util.concurrent.atomic.AtomicInteger
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = n.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(l)
+    val a = body
+    Thread.sleep(500) // listener bus drains asynchronously
+    spark.sparkContext.removeSparkListener(l)
+    (a, n.get)
+  }
+
   test("CLRS network: max-flow 23 (known answer, run:49-style)") {
     val (edges, sources, sinks) = GraphSources.readDimacs(spark, fixture("clrs.dimacs"))
     val r = MaxFlow.run(spark, edges, sources, sinks)
@@ -117,6 +131,18 @@ class MaxFlowSpec extends AnyFunSuite {
     val r = MaxFlow.run(spark, edges, sources, sinks,
       MaxFlow.Config(validate = true))
     assert(r.flow == 23L)
+    // …and the layer does check: a state with flow past one capacity
+    // fails the first round's validation pass
+    val bad = GraphBuilder.buildState(spark, edges, sources, sinks).map { v =>
+      if (v.id != sources.head) v
+      else v.copy(adj = v.adj.map(a =>
+        if (a.nbr == GraphModel.SuperSource) a else a.copy(flow = a.capOut + 1)))
+    }
+    val dir = java.nio.file.Files.createTempDirectory("bad-state").toString + "/flat"
+    graft.sources.StateIO.writeState(bad, dir, parts = 2)
+    val err = intercept[org.apache.spark.SparkException](MaxFlow.resume(spark, dir,
+      MaxFlow.Config(validate = true, maxRounds = 1, exactCleanup = false)))
+    assert(err.getMessage.contains("flow out of bounds"), err.getMessage)
   }
 
   test("round report carries the MFCounter set (A8; mf/MFCounter.java:3-49)") {
@@ -151,9 +177,17 @@ class MaxFlowSpec extends AnyFunSuite {
     // driverCleanupMaxEdges=0 forbids the one-shot driver EK, so the whole
     // flow must come from the batched distributed-BFS fallback
     val (edges, sources, sinks) = GraphSources.readDimacs(spark, fixture("clrs.dimacs"))
-    val r = MaxFlow.run(spark, edges, sources, sinks,
-      MaxFlow.Config(maxRounds = 0, driverCleanupMaxEdges = 0L))
+    val (r, fallbackJobs) = jobsDuring(MaxFlow.run(spark, edges, sources, sinks,
+      MaxFlow.Config(maxRounds = 0, driverCleanupMaxEdges = 0L)))
     assert(r.flow == 23L && r.engineFlow == 0L && r.cleanupFlow == 23L, s"got $r")
+    // the fallback really ran: a distributed BFS costs a job per level and
+    // per batch, where the driver-side path collects the residual once
+    val (d, driverJobs) = jobsDuring(MaxFlow.run(spark, edges, sources, sinks,
+      MaxFlow.Config(maxRounds = 0)))
+    assert(d.flow == 23L)
+    info(s"jobs: fallback $fallbackJobs, driver-side $driverJobs")
+    assert(fallbackJobs >= 2 * driverJobs,
+      s"fallback ran $fallbackJobs jobs vs $driverJobs for the driver path")
     // and on a random graph vs the in-memory oracle
     val redges = EdmondsKarp.randomGraph(n = 10, edgeProb = 0.3, maxCap = 10, seed = 5)
     val ids = redges.flatMap(e => Seq(e._1, e._2)).distinct.sorted
