@@ -1,20 +1,36 @@
 package graft
 
+import graft.sources.StateIO
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Dev tool: stress the max-flow engine on a synthetic small-world graph
-  * (the reference's target topology — run:42's 5.1M-vertex fb crawl scaled
-  * down) with SHUFFLE-BYTES accounting — the measurement the schimmy
-  * superstep exists to win (topology never shuffled, only deltas).
-  * Not part of the driver contract; run with
-  * `sbt "runMain graft.ScaleProbe [nVertices]"` (SPARK_DRIVER_MEM=32g and
-  * SPARK_GRAFT_CPUS=32 recommended at 1M vertices).
+/** Dev tool: the one scale harness for the max-flow engine, on a
+  * synthetic small-world graph (the reference's target topology — run:42's
+  * 5.1M-vertex fb crawl scaled down). Not part of the driver contract.
+  * Every mode solves the same instance ([[edgesFor]] with fixed
+  * parameters, [[terminals]]`(n)`):
   *
-  * Exactness: for n ≤ SCALE_ORACLE_CAP (default 200k) the flow is checked
-  * against the in-memory Edmonds-Karp oracle; above that the oracle BFS
-  * sweep itself dominates, so the certificate is flow conservation on the
-  * assignment alone.
+  *  - `ScaleProbe [n]` — one measured run with SHUFFLE-BYTES accounting
+  *    (the measurement the schimmy superstep exists to win: topology never
+  *    shuffled, only deltas). For n ≤ SCALE_ORACLE_CAP (default 200k) the
+  *    flow is checked against the in-memory Edmonds-Karp oracle; above
+  *    that the oracle BFS sweep itself dominates, so the certificate is
+  *    flow conservation on the assignment alone.
+  *  - `ScaleProbe run <n> <stateDir>` — the same run with round-tagged
+  *    checkpoints every 3 rounds, meant to be killed mid-flight (`kill -9`
+  *    the pid it writes to /tmp/mfresume.pid) — S7 exercised by an actual
+  *    kill, not a maxRounds stop.
+  *  - `ScaleProbe resume <stateDir> <wantTotal>` — audits the newest
+  *    complete checkpoint (flow already routed = net supersource outflow
+  *    in the state), resumes, and requires routed + resumed == wantTotal
+  *    (the flow `ScaleProbe <n>` printed), resumed-assignment
+  *    conservation, and round-index continuity (first resumed round =
+  *    checkpoint round + 1).
+  *  - `ScaleProbe mst <n>` — Borůvka vs in-memory Kruskal on the graph.
+  *
+  * Run with `sbt "runMain graft.ScaleProbe <mode> ..."`
+  * (SPARK_DRIVER_MEM=32g and SPARK_GRAFT_CPUS=32 recommended at 1M
+  * vertices).
   */
 object ScaleProbe {
 
@@ -42,9 +58,9 @@ object ScaleProbe {
                  seed: Long): Seq[(Long, Long, Long)] =
     (0L until n.toLong).flatMap(edgesFor(_, n, k, rewireP, maxC, seed))
 
-  /** The probe family's fixed terminal pick — 8 source / 8 sink samples
-    * from a seeded rng, shared with MfResumeProbe so its killed and
-    * uninterrupted runs solve the exact same instance.
+  /** The harness's fixed terminal pick — 8 source / 8 sink samples from a
+    * seeded rng, so the killed, resumed and uninterrupted runs solve the
+    * exact same instance.
     */
   def terminals(n: Int): (Seq[Long], Seq[Long]) = {
     val rng = new scala.util.Random(13L)
@@ -67,22 +83,39 @@ object ScaleProbe {
     }
   }
 
-  /** MST leg: Borůvka on the small-world graph vs in-memory Kruskal
-    * under the identical total order — edge-for-edge at probe scale.
-    * `runMain graft.ScaleProbe mst <n>`
-    */
-  private def mstProbe(n: Int): Unit = {
+  // the one graph instance every mode solves: ring degree, rewire
+  // probability, max capacity and seed
+  private val (k, rewireP, maxC, seed) = (4, 0.1, 10, 7L)
+
+  private def session(): SparkSession = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
     val spark = SparkSession.builder().master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    SparkHygiene.quietRddLogs()
+    spark
+  }
+
+  /** The graph as (src, dst, cap), persisted and counted — executors
+    * regenerate their slice of the ring, nothing is shipped.
+    */
+  private def graphFrame(spark: SparkSession, n: Int): (DataFrame, Long) = {
     import spark.implicits._
-    val (k, rewireP, maxC, seed) = (4, 0.1, 10, 7L)
     val df = spark.range(0L, n.toLong)
       .flatMap(edgesFor(_, n, k, rewireP, maxC, seed))
-      .toDF("u", "v", "w")
+      .toDF("src", "dst", "cap").persist()
+    (df, df.count())
+  }
+
+  /** MST leg: Borůvka on the small-world graph vs in-memory Kruskal
+    * under the identical total order — edge-for-edge at probe scale.
+    */
+  private def mstProbe(n: Int): Unit = {
+    val spark = session()
+    val (edges, _) = graphFrame(spark, n)
+    val df = edges.toDF("u", "v", "w")
     val t0 = System.nanoTime()
     val got = graph.Mst.run(spark, df).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
@@ -112,26 +145,14 @@ object ScaleProbe {
     if (got != want.toSet) sys.exit(1)
   }
 
-  def main(args: Array[String]): Unit = {
-    if (args.headOption.contains("mst")) { mstProbe(args(1).toInt); return }
-    val n = args.headOption.map(_.toInt).getOrElse(20000)
+  /** One measured max-flow run, checked against the oracle (n ≤ cap) and
+    * flow conservation.
+    */
+  private def maxFlowProbe(n: Int): Unit = {
     val oracleCap = sys.env.getOrElse("SCALE_ORACLE_CAP", "200000").toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    import spark.implicits._
-
-    val (k, rewireP, maxC, seed) = (4, 0.1, 10, 7L)
+    val spark = session()
     val (sources, sinks) = terminals(n)
-
-    // executors regenerate their slice of the ring — nothing is shipped
-    val df = spark.range(0L, n.toLong)
-      .flatMap(edgesFor(_, n, k, rewireP, maxC, seed))
-      .toDF("src", "dst", "cap").persist()
-    val nEdges = df.count()
+    val (df, nEdges) = graphFrame(spark, n)
     println(s"SCALE n=$n edges=$nEdges sources=${sources.size} sinks=${sinks.size}")
 
     val want: Option[Long] =
@@ -154,7 +175,7 @@ object ScaleProbe {
     val dt = (System.nanoTime() - t1) / 1e9
     Thread.sleep(1000) // listener bus drains asynchronously
     spark.sparkContext.removeSparkListener(meter)
-    val conserved = graft.sources.StateIO.conservationHolds(r.assignment, r.flow)
+    val conserved = StateIO.conservationHolds(r.assignment, r.flow)
     println(f"SCALE maxflow flow=${r.flow} engine=${r.engineFlow} " +
       f"cleanup=${r.cleanupFlow} rounds=${r.rounds} t=$dt%.1f s " +
       f"shuffleMB=${meter.bytes / 1e6}%.1f shuffleRecords=${meter.records} " +
@@ -162,5 +183,61 @@ object ScaleProbe {
       f"conserved=$conserved ok=${want.forall(_ == r.flow)}")
     spark.stop()
     if (!conserved || want.exists(_ != r.flow)) sys.exit(1)
+  }
+
+  /** The run to kill: round-tagged checkpoints every 3 rounds. */
+  private def killableRun(n: Int, dir: String): Unit = {
+    val spark = session()
+    val (sources, sinks) = terminals(n)
+    val (df, _) = graphFrame(spark, n)
+    // sbt forks this JVM via an @argfile, so the class name is invisible
+    // to pkill/proc-scans — publish our own pid for the kill harness
+    java.nio.file.Files.write(java.nio.file.Paths.get("/tmp/mfresume.pid"),
+      ProcessHandle.current().pid().toString.getBytes("UTF-8"))
+    println(s"RESUMEPROBE run started n=$n stateDir=$dir (kill me mid-flight)")
+    val r = graph.MaxFlow.run(spark, df, sources, sinks,
+      graph.MaxFlow.Config(stateDir = Some(dir), checkpointEvery = 3))
+    // only reached if the harness failed to kill in time
+    println(s"RESUMEPROBE run finished uninterrupted flow=${r.flow}")
+    spark.stop()
+  }
+
+  /** Resume the killed run and audit it against the uninterrupted flow. */
+  private def resumeAudit(dir: String, want: Long): Unit = {
+    val spark = session()
+    val ckRound = StateIO.latestRound(spark, dir)
+      .getOrElse(sys.error(s"no complete round checkpoint under $dir"))
+    // flow already routed at the checkpoint = net supersource outflow
+    // recorded in the durable state itself
+    val routed = StateIO.readState(spark, StateIO.roundDir(dir, ckRound))
+      .filter(_.id == graph.GraphModel.SuperSource)
+      .head().adj.map(_.flow).sum
+    val t0 = System.nanoTime()
+    val r = graph.MaxFlow.resume(spark, dir)
+    val dt = (System.nanoTime() - t0) / 1e9
+    val conserved = StateIO.conservationHolds(r.assignment, r.flow)
+    val firstRound = r.rounds_report.headOption.map(_.round).getOrElse(-1)
+    println(f"RESUMEPROBE resume ckRound=$ckRound routed=$routed " +
+      f"resumed=${r.flow} total=${routed + r.flow} want=$want " +
+      f"firstResumedRound=$firstRound rounds=${r.rounds} t=$dt%.1f s " +
+      f"conserved=$conserved")
+    require(conserved, "resumed-run conservation violated")
+    require(firstRound == ckRound + 1,
+      s"round-index continuity broken: $firstRound after $ckRound")
+    require(routed + r.flow == want,
+      s"flow mismatch: $routed + ${r.flow} != $want")
+    println("RESUMEPROBE resume OK")
+    spark.stop()
+  }
+
+  def main(args: Array[String]): Unit = args.toList match {
+    case Nil => maxFlowProbe(20000)
+    case "mst" :: n :: Nil => mstProbe(n.toInt)
+    case "run" :: n :: dir :: Nil => killableRun(n.toInt, dir)
+    case "resume" :: dir :: want :: Nil => resumeAudit(dir, want.toLong)
+    case n :: Nil if n.forall(_.isDigit) => maxFlowProbe(n.toInt)
+    case other =>
+      sys.error(s"usage: [n] | mst <n> | run <n> <stateDir> | " +
+        s"resume <stateDir> <wantTotal>; got $other")
   }
 }

@@ -8,8 +8,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *   - relational substrate (SURVEY §2.7, graft.relational.Relational)
   *   - graph algorithms (BFS / max-flow, graft.graph)
   *   - training-data pipeline ops (dedup / similarity / text, graft.ops)
-  * Each key has a DuckDB-equivalent SQL in `oracleSql` unless the operator
-  * is not SQL-expressible (then the driver records a rows-only check).
+  * Every key has a DuckDB-equivalent SQL in `oracleSql`, and every oracle
+  * names a query (SparkEntrySpec checks both directions). Operators that
+  * are iterative fixpoints or approximate by contract carry a
+  * fixture-keyed literal (q16_maxflow) or a banded oracle (q20).
   */
 object SparkEntry {
 

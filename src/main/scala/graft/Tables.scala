@@ -15,10 +15,10 @@ object Tables {
     if (name == "events") {
       // events.ts has appeared as two physical types across testdata
       // generations: parquet TIMESTAMP(NANOS) (Spark rejects it by default;
-      // the legacy conf reads it as a long of epoch nanos — also what the
-      // scale probes write), and plain TIMESTAMP(MICROS) without timezone
-      // (Spark reads TIMESTAMP_NTZ). Normalize both to a session-tz micros
-      // TIMESTAMP so every downstream operator sees one schema.
+      // the legacy conf reads it as a long of epoch nanos), and plain
+      // TIMESTAMP(MICROS) without timezone (Spark reads TIMESTAMP_NTZ).
+      // Normalize both to a session-tz micros TIMESTAMP so every
+      // downstream operator sees one schema.
       // The conf is session-global but concurrency-safe, unlike the loop
       // sizing the r4 verdict removed: set-once, never restored, and EVERY
       // reader of the nanos layout needs the same value.

@@ -30,7 +30,8 @@ object ConnectedComponents {
     runCounted(spark, edges, maxIter)._1
 
   /** As [[run]], also reporting the rounds executed (the final, no-change
-    * round included) — the convergence diagnostic the scale probes record.
+    * round included) — how a caller tells convergence (rounds < maxIter)
+    * from a stop at the cap.
     */
   def runCounted(spark: SparkSession, edges: DataFrame,
                  maxIter: Int = 50): (DataFrame, Int) = {

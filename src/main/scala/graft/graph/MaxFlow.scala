@@ -85,7 +85,8 @@ object MaxFlow {
       /** Durable round-state checkpointing (S7; the reference's
         * round-<i>/master dirs, ff3/FordFulkerson.java:155-162): when set,
         * the flushed state is written here every `checkpointEvery` rounds
-        * and at convergence, and `MaxFlow.resume` can continue from it. */
+        * and whenever the loop exits (convergence or `maxRounds`), and
+        * `MaxFlow.resume` can continue from it. */
       stateDir: Option[String] = None,
       checkpointEvery: Int = 10,
       /** mf.sink.excess (ff1/FordFulkerson.java:29, default true): when
@@ -565,7 +566,9 @@ object MaxFlow {
         (round > 1 && got == 0 && ctrs.loseExcess.value == 0 && frontierStalled) ||
         (engineFlow > 0 && zeroStreak >= conf.acceptPatience)
       conf.stateDir.foreach { dir =>
-        if (done || round % conf.checkpointEvery == 0) {
+        // the exit round is always written: a resume that had to redo
+        // rounds past the newest checkpoint would count their flow twice
+        if (done || round >= conf.maxRounds || round % conf.checkpointEvery == 0) {
           // persist the FLUSHED view so resume starts with no pending
           // delta; round-tagged dir (kill-safe) + prune to bound storage
           val bcF = sc.broadcast(pending)

@@ -117,12 +117,11 @@ object Dedup {
   }
 
   /** The distinct (doc, 3-shingle) relation and the (doc, band, bandhash)
-    * LSH index behind [[ddMinhashLsh]] — exposed so the scale probe can
-    * measure bucket-size distributions on the REAL relations the query
-    * joins (not a reconstruction). `tok` comes back persisted; the caller
-    * owning the run unpersists it.
+    * LSH index behind [[ddMinhashLsh]], over the twin-planted oracle
+    * corpus. `tok` comes back persisted; the caller owning the run
+    * unpersists it.
     */
-  private[graft] def minhashShinglesAndBands(
+  private def minhashShinglesAndBands(
       s: SparkSession, dir: String): (DataFrame, DataFrame) = {
     docs(s, dir)
     minhashShinglesAndBandsOn(

@@ -1247,10 +1247,10 @@ object Multimodal {
     mmHistDiff(s.range(0L, f).map(i => histDiffFrame(i)))
   }
 
-  /** One planted frame of the [[mmHistDiff]] sequence — shared with the
-    * 100k-frame scale probe.
+  /** One planted frame of the [[mmHistDiff]] sequence: a pure function
+    * of the frame index, so executors render their slice unshipped.
     */
-  def histDiffFrame(fi: Long): MediaRecord = {
+  private def histDiffFrame(fi: Long): MediaRecord = {
     val base = (fi + (fi / 16) * 128) % 256
     val img = new java.awt.image.BufferedImage(32, 24,
       java.awt.image.BufferedImage.TYPE_INT_RGB)

@@ -27,14 +27,12 @@ object Pipeline {
     * a,b,c share one canonical id even when a,c are not within radius).
     */
   def ddResolve(s: SparkSession, dir: String): DataFrame =
-    ddResolveCounted(s, dir)._1.orderBy("doc_id")
+    ddResolveUnordered(s, dir).orderBy("doc_id")
 
-  /** [[ddResolve]] plus the label-propagation rounds it took to converge —
-    * the diagnostic the pipeline scale probe records (rounds ≤ deepest
-    * near-dup chain).
+  /** [[ddResolve]] without its presentation sort — the form computation
+    * consumers (ds_softdedup's weight join) take.
     */
-  private[graft] def ddResolveCounted(s: SparkSession,
-                                      dir: String): (DataFrame, Int) = {
+  private def ddResolveUnordered(s: SparkSession, dir: String): DataFrame = {
     // checkpoint before self-union: Spark's InlineCTE x DeduplicateRelations
     // throws on a self-union of a CTE-bearing plan, and the pair relation
     // is reused by both direction branches anyway. The UNORDERED pair
@@ -45,14 +43,11 @@ object Pipeline {
       .localCheckpoint(eager = true)
     val edges = pairs.select(col("doc_a").as("src"), col("doc_b").as("dst"))
       .unionAll(pairs.select(col("doc_b").as("src"), col("doc_a").as("dst")))
-    val (comps, rounds) =
-      graft.graph.ConnectedComponents.runCounted(s, edges, maxIter = 20)
     // UNORDERED (r13): the declared query adds its presentation sort in
-    // ddResolve above; computation consumers (ds_softdedup's joins, the
-    // scale probe's parquet dump) never needed the range exchange
-    (comps
+    // ddResolve above; ds_softdedup's joins never needed the range exchange
+    graft.graph.ConnectedComponents.run(s, edges, maxIter = 20)
       .withColumnRenamed("node", "doc_id")
-      .withColumnRenamed("comp", "canon_id"), rounds)
+      .withColumnRenamed("comp", "canon_id")
   }
 
   /** Near-dup cluster resolution over CALLER-SUPPLIED candidate pairs
@@ -1638,7 +1633,7 @@ object Pipeline {
          |SELECT doc_id + ${Dedup.TwinIdOffset} FROM __docs""".stripMargin)
     // unordered membership (r13): the weight join never needed
     // dd_resolve's presentation sort
-    dsSoftDedup(corpus, ddResolveCounted(s, dir)._1)
+    dsSoftDedup(corpus, ddResolveUnordered(s, dir))
   }
 
   /** Deterministic token-dropout augmentation (the EDA random-deletion

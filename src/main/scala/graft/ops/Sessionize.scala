@@ -1801,9 +1801,9 @@ object Sessionize {
     * (a concentrated, NOT scale-free-from-1 population; re-fit with a
     * raised xmin before claiming a power law), and a genuinely Pareto
     * tail reads ~0.8 above its continuous exponent (the known floor
-    * bias CSN's xmin−0.5 correction would remove — measured in
-    * PipelineScaleProbe addendum26). `max_x` anchors the tail the
-    * estimate summarizes.
+    * bias CSN's xmin−0.5 correction would remove — a planted 200k-user
+    * Pareto(2.5) tail reads 3.295, PERF.md "addendum26"). `max_x`
+    * anchors the tail the estimate summarizes.
     *
     * Engine-exactness: counts are integers; each user's ln(x) is rounded
     * to 9 BEFORE the order-free DECIMAL(28,9) sum (the ta_perplexity

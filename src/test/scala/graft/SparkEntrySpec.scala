@@ -10,6 +10,8 @@ class SparkEntrySpec extends AnyFunSuite {
   test("every oracleSql key has a matching queries entry") {
     val dangling = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
     assert(dangling.isEmpty, s"oracle without query: $dangling")
+    val unoracled = SparkEntry.queries.keySet -- SparkEntry.oracleSql.keySet
+    assert(unoracled.isEmpty, s"query without oracle: $unoracled")
   }
 
   test("query names are unique across modules (no silent map overwrites)") {

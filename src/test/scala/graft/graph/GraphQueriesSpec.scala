@@ -167,6 +167,15 @@ class GraphQueriesSpec extends AnyFunSuite {
     assert(total > PageRank.Scale * 99L / 100 && total <= PageRank.Scale)
     // non-vacuous: ranks differentiated (a hub outranks a leaf somewhere)
     assert(got.values.toSet.size > 1)
+    // fixed-point determinism: any input layout reproduces the same bits,
+    // which float PageRank cannot promise
+    import spark.implicits._
+    val sym = (fwd ++ fwd.map(_.swap)).toSeq.toDF("src", "dst")
+    for (parts <- Seq(1, 7)) {
+      val re = PageRank.run(spark, sym.repartition(parts), iters = 3).collect()
+        .map(r => r.getLong(0) -> r.getLong(1)).toMap
+      assert(re == expected, s"rank vector differs at $parts input partitions")
+    }
   }
 
   test("PageRank.run on a symmetric triangle keeps the uniform fixpoint") {

@@ -52,23 +52,27 @@ class StateIOSpec extends AnyFunSuite {
 
   test("round-state checkpoint + resume reaches the exact flow (S7 restart)") {
     val (edges, sources, sinks) = GraphSources.readDimacs(spark, fixture("clrs.dimacs"))
-    val dir = java.nio.file.Files.createTempDirectory("resume").toString + "/rounds"
-    // cut the first run short, no cleanup: it must leave flow on the table
-    val first = MaxFlow.run(spark, edges, sources, sinks,
-      MaxFlow.Config(maxRounds = 2, exactCleanup = false,
-        stateDir = Some(dir), checkpointEvery = 1))
-    assert(first.flow < 23L)
-    // round-tagged layout: checkpoints land in round-<i>/ dirs (kill-safe —
-    // a crash mid-write can never destroy the previous complete round),
-    // pruned to the newest 2
-    assert(StateIO.latestRound(spark, dir).contains(2))
-    val rest = MaxFlow.resume(spark, dir)
-    assert(first.flow + rest.flow == 23L,
-      s"first=${first.flow} rest=${rest.flow}")
-    // round-index continuity: the resumed loop continues the reference's
-    // round numbering from the checkpoint instead of restarting at 1
-    assert(rest.rounds_report.head.round == first.rounds_report.last.round + 1)
-    assert(rest.rounds == rest.rounds_report.last.round)
+    // checkpointEvery = 5 > maxRounds: the maxRounds stop is on no
+    // multiple of it, so only the exit-round write can make it durable
+    for (every <- Seq(1, 5)) {
+      val dir = java.nio.file.Files.createTempDirectory("resume").toString + "/rounds"
+      // cut the first run short, no cleanup: it must leave flow on the table
+      val first = MaxFlow.run(spark, edges, sources, sinks,
+        MaxFlow.Config(maxRounds = 2, exactCleanup = false,
+          stateDir = Some(dir), checkpointEvery = every))
+      assert(first.flow < 23L)
+      // round-tagged layout: checkpoints land in round-<i>/ dirs (kill-safe —
+      // a crash mid-write can never destroy the previous complete round),
+      // pruned to the newest 2
+      assert(StateIO.latestRound(spark, dir).contains(2), s"checkpointEvery=$every")
+      val rest = MaxFlow.resume(spark, dir)
+      assert(first.flow + rest.flow == 23L,
+        s"checkpointEvery=$every first=${first.flow} rest=${rest.flow}")
+      // round-index continuity: the resumed loop continues the reference's
+      // round numbering from the checkpoint instead of restarting at 1
+      assert(rest.rounds_report.head.round == first.rounds_report.last.round + 1)
+      assert(rest.rounds == rest.rounds_report.last.round)
+    }
   }
 
   test("cleanup flow reaches the durable checkpoint (resume sees a quiescent graph)") {
